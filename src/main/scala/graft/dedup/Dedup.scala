@@ -149,26 +149,6 @@ object Dedup {
       .select(col("doc_id"), col("bk.band").as("band"), col("bk.key").as("key"))
   }
 
-  /** MinHash+LSH near-dup pairs verified with exact Jaccard.
-    *
-    * Duplicate-heavy corpora are the norm, and identical docs collide in
-    * EVERY band — naive LSH turns f exact copies into f²/2 candidate
-    * pairs. Guards, in order:
-    *   1. exact-dedup first: LSH runs over one REPRESENTATIVE per
-    *      identical-text group; rep-level pairs are expanded back to
-    *      member pairs at the end (identical docs have identical shingle
-    *      sets, so every member pair inherits the rep pair's Jaccard
-    *      exactly — the output is unchanged, only the quadratic candidate
-    *      generation + verification work disappears).
-    *   2. `maxBucketSize` caps any residual pathological band bucket
-    *      (bounded work at the price of a bounded recall loss; OFF by
-    *      default = Long.MaxValue so small-scale results stay exact).
-    *
-    * Shingles are localCheckpoint'ed (lazy): materialized once, reused by
-    * the signature/verify stages, and the blocks are released by the
-    * ContextCleaner when the result goes out of scope — no cache leak
-    * across repeated calls.
-    */
   /** Opt-in bucket-size cap shared by the LSH blocking paths (minhash
     * bands, embedding hyperplane tables): window-count rows per bucket
     * key, LOG any drop (silent truncation would read as full coverage —
@@ -190,6 +170,26 @@ object Dedup {
       sized.filter(col("__bs") <= cap).drop("__bs")
     }
 
+  /** MinHash+LSH near-dup pairs verified with exact Jaccard.
+    *
+    * Duplicate-heavy corpora are the norm, and identical docs collide in
+    * EVERY band — naive LSH turns f exact copies into f²/2 candidate
+    * pairs. Guards, in order:
+    *   1. exact-dedup first: LSH runs over one REPRESENTATIVE per
+    *      identical-text group; rep-level pairs are expanded back to
+    *      member pairs at the end (identical docs have identical shingle
+    *      sets, so every member pair inherits the rep pair's Jaccard
+    *      exactly — the output is unchanged, only the quadratic candidate
+    *      generation + verification work disappears).
+    *   2. `maxBucketSize` caps any residual pathological band bucket
+    *      (bounded work at the price of a bounded recall loss; OFF by
+    *      default = Long.MaxValue so small-scale results stay exact).
+    *
+    * Shingles are localCheckpoint'ed (lazy): materialized once, reused by
+    * the signature/verify stages, and the blocks are released by the
+    * ContextCleaner when the result goes out of scope — no cache leak
+    * across repeated calls.
+    */
   def minhashPairs(docs: DataFrame, n: Int, threshold: Double,
       numHashes: Int = 32, rowsPerBand: Int = 4,
       maxBucketSize: Long = Long.MaxValue): DataFrame = {

@@ -20,10 +20,6 @@ object Gazetteer {
 
   val AliasNs = "http://graft.io/alias/"
 
-  /** Broadcast-cutoff probe results per canonical gazetteer plan. */
-  private val probeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
   /** Deterministic gazetteer from the `nation` dimension: three surface
     * variants per entity, each its own alias IRI (the alias graph links
     * them; CC canonicalization picks the least IRI).
@@ -210,21 +206,15 @@ object Gazetteer {
     val spans = ngramSpanHashes(transcripts, lengths)
     val conf = transcripts.sparkSession.conf
     val bc = broadcastGaz.getOrElse {
-      val max = conf.get("graft.gazetteer.broadcastMaxRows",
-        DefaultBroadcastMaxRows.toString).toLong
-      // memoized per canonical gazetteer plan: the probe count would
-      // otherwise re-evaluate the full gazetteer lineage on EVERY call,
-      // once for the probe and again for the join build (review-found).
-      // Files mutating mid-session are out of scope, as everywhere else.
-      val key = gaz.queryExecution.logical.canonicalized.toString + "|" + max
-      val cached = probeCache.get(key)
-      if (cached != null) cached.booleanValue
-      else {
-        val fits = gaz.count() <= max
-        if (probeCache.size < 1024)
-          probeCache.put(key, java.lang.Boolean.valueOf(fits))
-        fits
-      }
+      val spark = gaz.sparkSession
+      val max = broadcastCutoff(spark)
+      // memoized per canonical gazetteer plan and its input files: the
+      // probe count would otherwise re-evaluate the full gazetteer lineage
+      // on EVERY call, once for the probe and again for the join build
+      // (review-found). Session-scoped: the plan may name session RDDs.
+      graft.Memo(s"gazetteer.fits:$max:" +
+          gaz.queryExecution.logical.canonicalized, gaz.inputFiles.toSeq,
+        spark.sessionState.newHadoopConf(), Some(spark))(gaz.count() <= max)
     }
     val joined =
       if (bc) spans.join(broadcast(g), "__ng")

@@ -24,10 +24,6 @@ object AlgebraSuite {
   private def unit(s: SparkSession) =
     graft.rules.ConstructParser.unitFrame(s)
 
-  /** Once-per-JVM HDT fixture encodes (keyed by output path). */
-  private val hdtFixtureOnce =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Deterministic on-disk git repo for `ngs_git`: config-isolated
     * (`GIT_CONFIG_GLOBAL/SYSTEM=/dev/null`), fixed identity and epoch
     * author/committer dates make the two commit ids — and so the graph
@@ -801,14 +797,15 @@ object AlgebraSuite {
       // HDT binary round-trip under the oracle: encode the transcript
       // triples as .hdt, scan it back through the auto-probe front door
       // (HDT is a triple SET — the oracle dedups to match). The encode is
-      // memoized per dir like the RML fixtures (r8 precedent): repeated
-      // calls — the bench steady-state run in particular — measure the
-      // READER, the actual scale path, not fixture setup.
+      // memoized on its input tables like the RML fixtures (r8
+      // precedent): repeated calls — the bench steady-state run in
+      // particular — measure the READER, not fixture setup.
       val path = sys.props("java.io.tmpdir") +
         s"/graft_hdt_${dir.replaceAll("[^a-zA-Z0-9]", "_")}.hdt"
-      hdtFixtureOnce.computeIfAbsent(path, p => {
-        graft.sources.HdtIO.writeHdt(trip(s, dir), p); p
-      })
+      graft.Memo("fixture.hdt", Seq(s"$dir/events.parquet",
+          s"$dir/documents.parquet"), s.sessionState.newHadoopConf()) {
+        graft.sources.HdtIO.writeHdt(trip(s, dir), path)
+      }
       RdfIO.readRdfAuto(s, path)
     }),
     // --- whole-script execution from text: LOAD + updates + query over

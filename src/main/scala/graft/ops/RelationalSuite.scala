@@ -10,16 +10,17 @@ import graft.sources.SyntheticQuads
 object RelationalSuite {
 
   private def quads(s: SparkSession, dir: String) = SyntheticQuads(s, dir)
-  // fixture files are deterministic functions of (dir); write once per
-  // JVM instead of on every query construction (three queries share the
-  // SRJ file — repeated driver-side collect+write would land in bench time)
-  private val fixtureOnce = scala.collection.concurrent.TrieMap[String, String]()
+  // fixture files are deterministic functions of their input tables:
+  // written once while those are unchanged instead of on every query
+  // construction (three queries share the SRJ file — repeated driver-side
+  // collect+write would land in bench time)
   private def srjFixture(s: SparkSession, dir: String): String =
-    fixtureOnce.getOrElseUpdate("srj:" + dir, {
+    graft.Memo("fixture.srj", Seq(s"$dir/events.parquet"),
+        s.sessionState.newHadoopConf()) {
       val p = graft.sources.ResultSetIO.fixturePath(dir)
       graft.sources.ResultSetIO.writeSrjFixture(s, dir, p)
       p
-    })
+    }
   /** Verbatim reference fixture from the classpath (provenance:
     * src/main/resources/reference/README.md). Shared with
     * ReferenceTestsSpec — one loader, one tmp naming scheme.
@@ -39,7 +40,7 @@ object RelationalSuite {
     * never sees a half-written file.
     */
   private[graft] def refFixture(name: String): String =
-    memoOnce("ref:" + name) {
+    graft.Memo("fixture.ref:" + name, Nil) {
       val p = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
         "graft_ref_" + name)
       val tmp = java.nio.file.Files.createTempFile(p.getParent, "graft_ref_", ".tmp")
@@ -49,13 +50,6 @@ object RelationalSuite {
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
       p.toString
     }
-
-  /** Once-per-JVM fixture memo, shared by the suites (deterministic
-    * fixtures keyed by name/dir — repeated bench/verify runs must time
-    * the query, not the fixture manufacture).
-    */
-  private[graft] def memoOnce(key: String)(write: => String): String =
-    fixtureOnce.getOrElseUpdate(key, write)
 
   private def events(s: SparkSession, dir: String) =
     s.read.parquet(s"$dir/events.parquet")

@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Transcripts
-import graft.rules.{Rule, RuleCompiler, TranscriptRules}
+import graft.rules.TranscriptRules
 import graft.linking.Gazetteer
 import graft.graphops.ConnectedComponents
 import graft.Checkpoints.TruncateOps
@@ -19,26 +19,24 @@ import graft.Checkpoints.TruncateOps
   */
 object Kg {
 
-  // Session-scoped memos of the DIMENSION-side artifacts (gazetteer +
-  // its longest-surface bound, alias-graph CC map): metadata-scale,
-  // corpus-independent, recomputed only when the dimension changes — the
-  // production shape (a warm dimension cache). The corpus-scale work is
-  // never memoized.
-  // keyed by the session OBJECT (reference identity — hash collisions of
-  // identityHashCode could otherwise serve a stopped session's blocks);
-  // entries live as long as the JVM, bounded by (#sessions x #dirs)
-  private val gazCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), (DataFrame, Seq[Int], Long)]()
+  // The DIMENSION-side artifacts (gazetteer + its surface lengths and
+  // size, alias-graph CC map) and the shared triple table are session
+  // memos of the tables they read: computed once per session and again
+  // only when those tables change — the production shape (a warm
+  // dimension cache). The corpus-scale work is never memoized.
+  private def memo[T](spark: SparkSession, name: String, sfDir: String,
+      tables: String*)(compute: => T): T =
+    graft.Memo(name, tables.map(t => s"$sfDir/$t.parquet"),
+      spark.sessionState.newHadoopConf(), Some(spark))(compute)
+
   private def gazFor(spark: SparkSession, sfDir: String): (DataFrame, Seq[Int], Long) =
-    gazCache.getOrElseUpdate((spark, sfDir), {
+    memo(spark, "kg.gazetteer", sfDir, "nation") {
       val g = Gazetteer(spark, sfDir).truncateLineage(false)
       // lengths + row count in ONE metadata job; the count feeds the
       // broadcast-cutoff decision so mentionsRaw skips its probe job
       val (lengths, n) = Gazetteer.surfaceTokenLengthsAndCount(g)
       (g, lengths, n)
-    })
-  private val ccCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
+    }
 
   def mentions(spark: SparkSession, sfDir: String): DataFrame = {
     val (g, lengths, n) = gazFor(spark, sfDir)
@@ -47,9 +45,10 @@ object Kg {
   }
 
   def aliasCc(spark: SparkSession, sfDir: String): DataFrame =
-    ccCache.getOrElseUpdate((spark, sfDir),
+    memo(spark, "kg.aliasCc", sfDir, "nation") {
       ConnectedComponents(Gazetteer.aliasEdges(spark, sfDir))
-        .truncateLineage(false))
+        .truncateLineage(false)
+    }
 
   /** Deduplicated canonical triples: base extraction + mention triples with
     * canonical entity IRIs + the alias→canonical mapping as triples in a
@@ -59,7 +58,7 @@ object Kg {
     canonicalTriplesOver(Transcripts(spark, sfDir), spark, sfDir)
 
   /** Default pipeline = the all-codegen broadcast-join form: measured to
-    * scale better than the literal-array variant at corpus scale, because
+    * scale better than a literal-array variant at corpus scale, because
     * higher-order functions (filter/transform lambdas) execute interpreted
     * while the broadcast join stays inside whole-stage codegen.
     */
@@ -82,57 +81,23 @@ object Kg {
     base.unionByName(m).unionByName(aliasTriples(cc)).distinct()
   }
 
-  /** Single-scan variant: the (small) gazetteer ⋈ CC map compiled into a
-    * literal-array generator rule — one transcript scan total, at the
-    * price of interpreted higher-order functions. Wins when the scan
-    * itself dominates (very wide tables / cold caches); KgSpec asserts it
-    * agrees with the default exactly.
-    */
-  def canonicalTriplesFused(spark: SparkSession, sfDir: String): DataFrame = {
-    val cc = aliasCc(spark, sfDir) // tiny: |alias vocabulary| rows
-    val surfToCanon = Gazetteer(spark, sfDir)
-      .join(cc, col("alias_iri") === col("node"))
-      .select(col("surface"), col("component"))
-      .orderBy("surface") // deterministic literal-array order
-      .collect().map(r => (r.getString(0), r.getString(1)))
-
-    // surfaces pre-normalized (space-padded, separator runs collapsed) at
-    // plan build; the row's normalized text is computed once per row
-    val entries = array(surfToCanon.map { case (s, c) =>
-      struct(lit(" " + s.replaceAll("[^A-Za-z0-9]+", " ").trim + " ").as("m"),
-        lit("<" + c + ">").as("c"))
-    }: _*)
-    val mentionArr = transform(
-      filter(entries, e => contains(col("__bt"), e.getField("m"))),
-      e => struct(col("turn_iri").as("s"),
-        lit("<http://graft.io/p/mentions>").as("p"),
-        e.getField("c").as("o"), col("g").as("g")))
-    val mentionRule = Rule("turn-mentions", lit(true), Nil, Some(mentionArr))
-
-    val turnTriples = RuleCompiler.compile(
-      TranscriptRules.withIris(Transcripts(spark, sfDir))
-        .withColumn("__bt", Gazetteer.boundaryNormText(col("text"))),
-      TranscriptRules.baseRules :+ mentionRule)
-    turnTriples.unionByName(aliasTriples(cc)).distinct()
-  }
-
   private def aliasTriples(cc: DataFrame): DataFrame = cc.select(
     concat(lit("<"), col("node"), lit(">")).as("subj"),
     lit("<http://graft.io/p/canonical>").as("pred"),
     concat(lit("<"), col("component"), lit(">")).as("obj"),
     lit("<http://graft.io/g/entities>").as("graph"))
 
-  /** Session-scoped memo of the canonical triple table (localCheckpoint:
-    * computed once, lineage truncated, blocks GC'd with the session).
-    * Downstream consumers (stats, exports) share one computation instead
-    * of re-running extraction+linking+CC per query — the production shape
-    * is materialize-once, aggregate-many.
+  /** Session memo of the canonical triple table (localCheckpoint:
+    * computed once per version of its input tables, lineage truncated,
+    * blocks GC'd with the session). Downstream consumers (stats, exports)
+    * share one computation instead of re-running extraction+linking+CC
+    * per query — the production shape is materialize-once,
+    * aggregate-many.
     */
-  private val ctCache =
-    scala.collection.concurrent.TrieMap[(SparkSession, String), DataFrame]()
   def canonicalTriplesShared(spark: SparkSession, sfDir: String): DataFrame =
-    ctCache.getOrElseUpdate((spark, sfDir),
-      canonicalTriples(spark, sfDir).truncateLineage(false))
+    memo(spark, "kg.canonicalTriples", sfDir, "events", "documents", "nation") {
+      canonicalTriples(spark, sfDir).truncateLineage(false)
+    }
 
   /** Per-named-graph profile (VoID-style: reference qb1–qb5 queries). */
   def graphStats(spark: SparkSession, sfDir: String): DataFrame =

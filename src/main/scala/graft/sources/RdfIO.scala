@@ -213,23 +213,15 @@ object RdfIO {
     */
   def probeRdfLocal(path: String): Boolean = {
     // group-end FILTER re-application evaluates the probe once per
-    // RESULT row (triple-scale after a SERVICE join) — memoize per JVM
-    // so each file is read once; bounded so a pathological listing
-    // cannot grow the map unchecked (files mutating mid-session are out
-    // of scope, as everywhere else in the engine)
-    val cached = probeCache.get(path)
-    if (cached != null) return cached.booleanValue
-    val r = probeRdfUncached(path)
-    if (probeCache.size < 65536) probeCache.put(path, java.lang.Boolean.valueOf(r))
-    r
+    // RESULT row (triple-scale after a SERVICE join) — memoized so each
+    // file is read once while it is unchanged (no session: the probe
+    // runs inside executor-side UDFs)
+    val f = new java.io.File(path)
+    f.isFile && graft.Memo("rdf.probe", Seq(f.toURI.toString))(
+      probeRdfUncached(f))
   }
 
-  private val probeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
-  private def probeRdfUncached(path: String): Boolean = {
-    val f = new java.io.File(path)
-    if (!f.isFile) return false
+  private def probeRdfUncached(f: java.io.File): Boolean = {
     val full = f.length <= 8L * 1024 * 1024
     val content =
       if (full) new String(java.nio.file.Files.readAllBytes(f.toPath),

@@ -23,47 +23,31 @@ import org.apache.spark.sql.expressions.Window
   */
 object Transcripts {
 
-  /** Cheap metadata-scale count of the dimension table (broadcast side),
-    * memoized per sfDir. Read straight from the parquet FOOTERS on the
-    * driver (row counts are file metadata) — zero Spark jobs, vs. the
-    * count() job this replaced.
+  /** Row count of the documents table (the broadcast side) from the
+    * parquet FOOTERS on the driver — zero Spark jobs, vs. the count() job
+    * this replaced — over the data files Spark's scan lists, memoized
+    * while they are unchanged.
     */
-  private val docCountCache = scala.collection.concurrent.TrieMap[String, Long]()
-  private def docCount(spark: SparkSession, sfDir: String): Long =
-    docCountCache.getOrElseUpdate(sfDir, {
-      import org.apache.hadoop.fs.Path
-      val conf = spark.sessionState.newHadoopConf()
-      val root = new Path(s"$sfDir/documents.parquet")
-      try {
-        val fs = root.getFileSystem(conf)
-        val files =
-          if (fs.getFileStatus(root).isDirectory) {
-            // FILES only, recursive (review-found: a flat listStatus
-            // opened partition SUBDIRECTORIES as parquet files and threw
-            // on layouts the replaced count() handled fine)
-            val it = fs.listFiles(root, true)
-            val buf = scala.collection.mutable.ArrayBuffer[Path]()
-            while (it.hasNext) {
-              val p = it.next().getPath
-              if (!p.getName.startsWith("_") && !p.getName.startsWith("."))
-                buf += p
-            }
-            buf.toSeq
-          } else Seq(root)
-        files.map { f =>
+  private def docCount(spark: SparkSession, sfDir: String): Long = {
+    val docs = s"$sfDir/documents.parquet"
+    val conf = spark.sessionState.newHadoopConf()
+    graft.Memo("transcripts.docCount", Seq(docs), conf) {
+      val root = new org.apache.hadoop.fs.Path(docs)
+      try graft.Memo.dataFiles(root.getFileSystem(conf), root).map { f =>
           val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf))
           try r.getRecordCount finally r.close()
         }.sum
-      } catch {
+      catch {
         case scala.util.control.NonFatal(e) =>
           // any layout the footer probe can't handle falls back to the
           // universal one-job count this probe replaced (same number)
           System.err.println(
             s"[transcripts] footer count fell back to count(): $e")
-          spark.read.parquet(s"$sfDir/documents.parquet").count()
+          spark.read.parquet(docs).count()
       }
-    })
+    }
+  }
 
   def apply(spark: SparkSession, sfDir: String): DataFrame = {
     val e = spark.read.parquet(s"$sfDir/events.parquet")

@@ -238,16 +238,28 @@ class RulesSpec extends AnyFunSuite {
   test("transcripts over a PARTITIONED documents layout (r10 regression: " +
       "the driver-side footer count must recurse into k=v subdirectories)") {
     val dir = java.nio.file.Files.createTempDirectory("graft_part_sf").toString
-    val src = TestSpark.sf0001
-    spark.read.parquet(s"$src/events.parquet")
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    spark.read.parquet(s"$src/documents.parquet")
-      .withColumn("part", col("doc_id") % 3)
-      .write.mode("overwrite").partitionBy("part")
-      .parquet(s"$dir/documents.parquet")
-    val t = Transcripts(spark, dir)
-    val base = Transcripts(spark, src)
-    assert(t.exceptAll(base).count() === 0)
-    assert(base.exceptAll(t).count() === 0)
+    try {
+      val src = TestSpark.sf0001
+      spark.read.parquet(s"$src/events.parquet")
+        .write.mode("overwrite").parquet(s"$dir/events.parquet")
+      spark.read.parquet(s"$src/documents.parquet")
+        .withColumn("part", col("doc_id") % 3)
+        .write.mode("overwrite").partitionBy("part")
+        .parquet(s"$dir/documents.parquet")
+      // leftovers of interrupted writes: Spark's scan skips hidden
+      // (`_`/`.`-prefixed) DIRECTORIES at every level, so the footer count
+      // must not see their parts either
+      val docs = java.nio.file.Paths.get(s"$dir/documents.parquet")
+      val part = java.nio.file.Files.list(docs.resolve("part=0"))
+        .filter(_.getFileName.toString.endsWith(".parquet")).findFirst.get
+      for (leftover <- Seq("_temporary/0", ".spark-staging-1/part=0")) {
+        val d = java.nio.file.Files.createDirectories(docs.resolve(leftover))
+        java.nio.file.Files.copy(part, d.resolve("part-00000-leftover.parquet"))
+      }
+      val t = Transcripts(spark, dir)
+      val base = Transcripts(spark, src)
+      assert(t.exceptAll(base).count() === 0)
+      assert(base.exceptAll(t).count() === 0)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 }
