@@ -121,15 +121,13 @@ object Gazetteer {
     * |lengths|) INDEPENDENT of gazetteer size — a 1M-surface gazetteer
     * costs the same scan as a 75-surface one (the build side is a hash
     * map). One row per (turn, matching surface), matching the
-    * word-boundary contains semantics exactly (post-join dedup per turn,
-    * so repeated occurrences emit one row, like `contains`).
-    */
-  /** One row per (turn, surface) — repeated occurrences collapse AFTER
-    * the broadcast join (post-join rows ≈ #mentions, so this shuffle is
-    * tiny; deduplicating n-grams per row pre-join was measured slower:
-    * array_distinct is quadratic interpreted work on every row vs a
-    * small exchange on the matches). `maxTokens` ≤ 0 means "compute from
-    * the gazetteer" (one metadata-scale job; pass it explicitly to skip).
+    * word-boundary contains semantics exactly: repeated occurrences
+    * collapse AFTER the join (post-join rows ≈ #mentions, so this shuffle
+    * is tiny; deduplicating n-grams per row pre-join was measured slower:
+    * array_distinct is quadratic interpreted work on every row vs a small
+    * exchange on the matches). An empty `tokenLengths` (Nil) means
+    * "compute from the gazetteer" (one metadata-scale job; pass it
+    * explicitly to skip).
     */
   def mentions(transcripts: DataFrame, gaz: DataFrame,
       tokenLengths: Seq[Int] = Nil,
@@ -144,6 +142,9 @@ object Gazetteer {
     */
   val DefaultBroadcastMaxRows = 2000000L
 
+  /** Salt buckets of the shuffled (past-broadcast) mention join. */
+  private val SaltBuckets = 8
+
   /** Like [[mentions]] but one row per OCCURRENCE (duplicates possible).
     * Pipelines whose downstream already deduplicates (e.g. the flagship's
     * final triple `distinct()`) use this to skip the dedup exchange.
@@ -156,18 +157,17 @@ object Gazetteer {
     * broadcast-hash — zero shuffle, skew-free by construction. When it
     * outgrows that, the join must shuffle on the n-gram key, and that
     * key is POWER-LAW skewed (a stop-word surface appears in most
-    * turns), so the fact side salts into `graft.gazetteer.saltBuckets`
-    * (default 8) buckets via [[graft.ops.SaltedJoin]] — the hot n-gram
-    * spreads over `buckets` reducers, the gazetteer replicates
-    * `buckets`×. Set saltBuckets ≤ 1 for a plain shuffle join. Measured
-    * on a planted-skew corpus (`Bench salt`, 40 M turns / 80% hot /
-    * 2.5 M-surface gazetteer): salted beats the plain shuffle 2.9×
-    * with AQE off and still 1.75× with AQE's skew split on; at small
-    * volume (2 M turns) the `buckets`× dim replication dominates and
-    * salting LOSES 2× — which is exactly why the broadcast tier comes
-    * first and salting only engages past it. `broadcastGaz` forces the
-    * decision; None probes with one distributed count (metadata-scale
-    * vs the scan the join is about to do).
+    * turns), so the fact side salts into `SaltBuckets` (8) buckets via
+    * [[graft.ops.SaltedJoin]] — the hot n-gram spreads over 8 reducers,
+    * the gazetteer replicates 8×. Measured on a planted-skew corpus
+    * (BASELINE.md, round 9 salted-join table: 40 M turns / 80% hot /
+    * 2.5 M-surface gazetteer): salted beats the plain shuffle 2.9× with
+    * AQE off and still 1.75× with AQE's skew split on; at small volume
+    * (2 M turns) the 8× dim replication dominates and salting LOSES 2× —
+    * which is exactly why the broadcast tier comes first and salting
+    * only engages past it. `broadcastGaz` forces the decision; None
+    * probes with one distributed count (metadata-scale vs the scan the
+    * join is about to do).
     */
   def mentionsRaw(transcripts: DataFrame, gaz: DataFrame,
       tokenLengths: Seq[Int] = Nil,
@@ -204,7 +204,6 @@ object Gazetteer {
         .filter(col("__ng").isNotNull)
     }
     val spans = ngramSpanHashes(transcripts, lengths)
-    val conf = transcripts.sparkSession.conf
     val bc = broadcastGaz.getOrElse {
       val spark = gaz.sparkSession
       val max = broadcastCutoff(spark)
@@ -218,12 +217,8 @@ object Gazetteer {
     }
     val joined =
       if (bc) spans.join(broadcast(g), "__ng")
-      else {
-        val buckets = conf.get("graft.gazetteer.saltBuckets", "8").toInt
-        if (buckets <= 1) spans.join(g, "__ng")
-        else graft.ops.SaltedJoin.inner(spans, g, "__ng",
-          saltSource = Seq(col("conv_id"), col("turn_idx")), buckets)
-      }
+      else graft.ops.SaltedJoin.inner(spans, g, "__ng",
+        saltSource = Seq(col("conv_id"), col("turn_idx")), SaltBuckets)
     joined.select(col("conv_id"), col("turn_idx"), col("surface"),
       col("alias_iri"))
   }

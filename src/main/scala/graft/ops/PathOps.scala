@@ -106,14 +106,6 @@ object PathOps {
       s"path closure did not converge in $MaxRounds doubling rounds")
   }
 
-  /** Seminaive (delta-frontier) transitive closure: each round extends
-    * only the NEW pairs by one edge (Δ ← (Δ ⋈ E) \ R), so total join work
-    * is proportional to the result, not |R|² per round — but rounds =
-    * graph diameter, not log₂(diameter). The right choice for bushy
-    * low-diameter graphs; [[closure]] (doubling) wins on long chains,
-    * where d sequential shuffle barriers dominate. Measured on both
-    * shapes by `Bench path` — see BASELINE.md.
-    */
   /** Materialize a frame to a cached RDD and rebuild it as a flat scan
     * with FRESH attribute ids — lineage truncation like `localCheckpoint`,
     * but safe for plans that reference the same source three times (the
@@ -127,6 +119,17 @@ object PathOps {
     // graft.checkpointDir is set
     graft.Checkpoints.truncateRdd(df)
 
+  /** Seminaive (delta-frontier) transitive closure: each round extends
+    * only the NEW pairs by one edge (Δ ← (Δ ⋈ E) \ R), so total join work
+    * is proportional to the result, not |R|² per round — but rounds =
+    * graph diameter, not log₂(diameter). In theory the right choice for
+    * bushy low-diameter graphs; [[closure]] (doubling) wins on long
+    * chains, where d sequential shuffle barriers dominate. Measured on a
+    * chain and a binary tree (BASELINE.md, round 4 transitive-closure
+    * table and its round 6 reliable-checkpoint revisit): doubling won
+    * both, so [[closure]] stays the default and this is the tested
+    * alternative.
+    */
   private[graft] def closureSeminaive(edges: DataFrame): DataFrame = {
     val e = materialize(edges.select("s", "o").distinct())
     var all = e

@@ -23,13 +23,17 @@ object SportalSuite {
   /** One local .nt fixture file per required sorttest name, written from
     * the SAME sportal triple frame (the reference's two snapshots of one
     * corpus), plus the `graft.fileAliases` remap that points the
-    * scripts' machine-specific /home/raven paths at it.
+    * scripts' machine-specific /home/raven paths at it. Only that one
+    * pair is added or replaced; the caller's other aliases stay.
     */
   private[graft] def scriptFixture(s: SparkSession, dir: String): Unit = {
     val root = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
       "graft_sorttest_" + dir.replaceAll("[^a-zA-Z0-9]", "_"))
     writeSortedNt(trip(s, dir), root)
-    sys.props("graft.fileAliases") = s"/home/raven/tmp/sorttest=$root"
+    val from = "/home/raven/tmp/sorttest"
+    val others = sys.props.get("graft.fileAliases").toSeq.flatMap(_.split(','))
+      .filterNot(p => p.isEmpty || p.startsWith(s"$from="))
+    sys.props("graft.fileAliases") = (others :+ s"$from=$root").mkString(",")
   }
 
   /** FIXTURE MANUFACTURE ONLY (in real use the sorted-nt endpoint file

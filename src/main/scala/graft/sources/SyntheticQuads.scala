@@ -107,44 +107,6 @@ object SyntheticQuads {
         lit("<http://ex.org/Nation>").as("obj")))
   }
 
-  /** ×`factor` sportal corpus for the battery-as-a-pipeline bench:
-    * customer IRIs, address bnode labels and literals are rewritten per
-    * replica so every distinct-count aggregate (distinctSubjects,
-    * distinctObjects, per-class/per-property partitions) scales with the
-    * factor; the dimension IRIs (segments, nations, classes) stay shared
-    * like real vocabulary terms. Plan-only — callers decide whether to
-    * materialize (the shared-scan form) or re-derive per query.
-    */
-  def sportalScaled(spark: SparkSession, sfDir: String, factor: Int): DataFrame = {
-    val base = sportalTriples(spark, sfDir)
-    if (factor <= 1) base
-    else {
-      // ONE plan branch: broadcast-crossJoin the replica ids instead of
-      // unioning `factor` copies of the scan — a 256-way union makes a
-      // 2048-leaf plan (29 MB task binaries, thousands of micro
-      // partitions whose per-task scheduling then dominates the battery)
-      // while the crossJoin is a single scan exploded 256× in place
-      val rep = broadcast(spark.range(factor)
-        .select(col("id").cast("string").as("#rep")))
-      def rw(c: org.apache.spark.sql.Column) =
-        when(c.startsWith("<http://ex.org/c/"),
-          concat(lit("<http://ex.org/c/r"), col("#rep"), lit("/"),
-            expr_substr(c, 18)))
-          .when(c.startsWith("_:a"),
-            concat(lit("_:r"), col("#rep"), lit("a"), expr_substr(c, 4)))
-          .when(c.startsWith("\""),
-            concat(lit("\"r"), col("#rep"), lit(" "), expr_substr(c, 2)))
-          .otherwise(c)
-      base.crossJoin(rep)
-        .select(rw(col("subj")).as("subj"), col("pred"),
-          rw(col("obj")).as("obj"))
-    }
-  }
-
-  /** substring(col, pos) to end of string (1-based, SQL semantics). */
-  private def expr_substr(c: org.apache.spark.sql.Column, pos: Int) =
-    c.substr(lit(pos), length(c))
-
   /** Lockstep DuckDB CTE: sportal(subj, pred, obj). */
   def sportalOracleCte: String =
     """sportal AS (

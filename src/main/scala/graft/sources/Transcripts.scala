@@ -89,24 +89,6 @@ object Transcripts {
         col("ts"))
   }
 
-  /** Deterministically replicated corpus: `factor` copies, each a distinct
-    * conversation (`conv_id ++ "-r<k>"`). Used by the scaling benchmark so
-    * the measured job is compute-bound rather than overhead-bound — the
-    * sandbox stand-in for the data volumes a 4N-executor cluster sees.
-    */
-  def scaled(spark: SparkSession, sfDir: String, factor: Int): DataFrame = {
-    val reps = spark.range(factor).select(col("id").cast("string").as("rep"))
-    // the small-sf parquet is a single split => the scan stage is ONE task;
-    // repartition the un-expanded rows first so the x`factor` expansion and
-    // everything after runs at full parallelism (on a real cluster the
-    // source already has thousands of splits and this is a no-op).
-    apply(spark, sfDir)
-      .repartition(spark.sparkContext.defaultParallelism)
-      .crossJoin(broadcast(reps))
-      .withColumn("conv_id", concat(col("conv_id"), lit("-r"), col("rep")))
-      .drop("rep")
-  }
-
   /** The same derivation as ANSI SQL for the DuckDB oracle, as a CTE body
     * named `transcripts`. Kept in lockstep with [[apply]].
     */

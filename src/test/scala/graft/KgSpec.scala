@@ -43,7 +43,7 @@ class KgSpec extends AnyFunSuite {
     fuzzy.unpersist()
   }
 
-  test("mention join routing: broadcast == plain shuffle == salted (same rows)") {
+  test("mention join routing: broadcast == salted (same rows)") {
     import org.apache.spark.sql.functions._
     import graft.linking.Gazetteer
     val gaz = Gazetteer(spark, TestSpark.sf0001)
@@ -52,20 +52,16 @@ class KgSpec extends AnyFunSuite {
         lit(0).as("turn_idx"),
         concat(lit("prefix NATION_"), (col("doc_id") % 30).cast("string"),
           lit(" and nation "), (col("doc_id") % 7).cast("string")).as("text"))
-    def run(forced: Option[Boolean], buckets: Int) = {
-      spark.conf.set("graft.gazetteer.saltBuckets", buckets.toString)
-      try Gazetteer.mentionsRaw(t, gaz, broadcastGaz = forced).collect()
+    def run(forced: Option[Boolean]) =
+      Gazetteer.mentionsRaw(t, gaz, broadcastGaz = forced).collect()
         .map(r => (r.getString(0), r.getInt(1), r.getString(2), r.getString(3)))
         .sorted.toSeq
-      finally spark.conf.unset("graft.gazetteer.saltBuckets")
-    }
-    val bc = run(Some(true), 8)
+    val bc = run(Some(true))
     assert(bc.nonEmpty)
-    assert(run(Some(false), 1) === bc)   // plain shuffle join
-    assert(run(Some(false), 8) === bc)   // salted shuffle join
+    assert(run(Some(false)) === bc)   // salted shuffle join
     // the probe tier itself: a tiny broadcastMaxRows forces the shuffle path
     spark.conf.set("graft.gazetteer.broadcastMaxRows", "1")
-    try assert(run(None, 8) === bc)
+    try assert(run(None) === bc)
     finally spark.conf.unset("graft.gazetteer.broadcastMaxRows")
   }
 

@@ -136,9 +136,19 @@ class SportalSpec extends AnyFunSuite {
     assert(out.where(col("pred") === s"<${V}property>").count() > 0L)
   }
 
+  /** Run `f`, then put `graft.fileAliases` back as it was before. */
+  private def keepingAliases[A](f: => A): A = {
+    val prev = sys.props.get("graft.fileAliases")
+    try f
+    finally prev match {
+      case Some(v) => sys.props("graft.fileAliases") = v
+      case None => sys.props.remove("graft.fileAliases")
+    }
+  }
+
   test("the 4 sportal scripts run verbatim (binsearch SERVICE remapped)") {
-    graft.ops.SportalSuite.scriptFixture(spark, TestSpark.sf0001)
-    try {
+    keepingAliases {
+      graft.ops.SportalSuite.scriptFixture(spark, TestSpark.sf0001)
       // qb2: COUNT(DISTINCT class) via file SERVICE on the dnb snapshot
       val qb2 = Sportal.runScript("sportal-qb2", trip)
       assert(soleInt(qb2) === nClasses)
@@ -162,7 +172,21 @@ class SportalSpec extends AnyFunSuite {
       val qf10 = Sportal.runScript("sportal-qf10", trip)
       assert(qf10.where(col("pred") ===
         "<http://www.example.org/sportal#objectClass>").count() > 0L)
-    } finally sys.props.remove("graft.fileAliases")
+    }
+  }
+
+  test("scriptFixture adds its sorttest alias and keeps the caller's others") {
+    keepingAliases {
+      sys.props("graft.fileAliases") = "/x=/y"
+      graft.ops.SportalSuite.scriptFixture(spark, TestSpark.sf0001)
+      val aliases = graft.rules.ConstructParser.fileAliases.toMap
+      assert(aliases.get("/x") === Some("/y"))
+      assert(aliases.get("/home/raven/tmp/sorttest").exists(
+        _.contains("graft_sorttest_")))
+      // a second call replaces its own pair instead of appending another
+      graft.ops.SportalSuite.scriptFixture(spark, TestSpark.sf0001)
+      assert(graft.rules.ConstructParser.fileAliases.size === 2)
+    }
   }
 
   test("scriptFixture's driver write refuses a data-scale frame (loud bound)") {
